@@ -1,6 +1,9 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main — one compact JSON line with headline per-query
   * wall-clock seconds, plus a full per-query dump to BENCH_FULL.json.
@@ -19,9 +22,29 @@ import org.apache.spark.sql.SparkSession
   * driver parse because a 6 KB all-queries line was truncated
   * mid-number). Headline keys: TPC-H as q1..q22, plus per-flight
   * totals (ssb/clickbench/everything else). The untruncated
-  * per-query map (3-decimal seconds) goes to ./BENCH_FULL.json.
+  * per-query map (3-decimal seconds) goes to ./BENCH_FULL.json
+  * (./BENCH_FILTERED.json for a run given a query-name filter).
   */
 object Bench {
+  /** The last full flight's per-gate dump, and the burst baseline of the next. */
+  val FullDump = "BENCH_FULL.json"
+  /** Where an arg-filtered dev run dumps its partial map instead. */
+  val FilteredDump = "BENCH_FILTERED.json"
+
+  /** Numeric fields (gate seconds, recall values) of a flight dump;
+    * empty when the file is absent. */
+  private[graft] def readFlight(p: Path): Map[String, Double] =
+    if (!Files.exists(p)) Map.empty
+    else new ObjectMapper().readTree(p.toFile).properties().asScala
+      .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }
+      .toMap
+
+  /** Write a flight's dump into `dir` and return its path. Only a full
+    * flight replaces BENCH_FULL.json: a filtered run's partial map would
+    * erase the baseline of every gate it skipped. */
+  private[graft] def writeDump(dir: Path, filtered: Boolean, json: String): Path =
+    Files.writeString(dir.resolve(if (filtered) FilteredDump else FullDump), json)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -137,17 +160,10 @@ object Bench {
     // and a green oracle, and the committed artifact had no way to say
     // "this number is suspect". Comparison base: the BENCH_FULL.json
     // committed in the working dir from the previous flight, read
-    // BEFORE this flight overwrites it. Purely additive metadata — no
-    // timing, query, or methodology change.
-    val prevFull: Map[String, Double] = {
-      val p = java.nio.file.Paths.get("BENCH_FULL.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        """"([A-Za-z0-9_]+)":(-?\d+(?:\.\d+)?)""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    }
+    // BEFORE this flight overwrites it (a filtered run never does, see
+    // writeDump). Purely additive metadata — no timing, query, or
+    // methodology change.
+    val prevFull = readFlight(Paths.get(FullDump))
     val burstSuspect = results.collect {
       case (k, v) if v > 1.0 && prevFull.get(k).exists(p => p > 0 && v > 3 * p) =>
         "\"" + k + "\""
@@ -158,8 +174,7 @@ object Bench {
       Seq("over_budget_gates" -> overBudget.mkString("[", ",", "]"),
         "burst_suspect_gates" -> burstSuspect.mkString("[", ",", "]"),
         "gate_budget_sec" -> r3(gateBudget)))
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
-      fullJson.getBytes("UTF-8"))
+    val dump = writeDump(Paths.get("."), only.isDefined, fullJson)
 
     // compact headline line: TPC-H per-query (short keys), flight totals
     val tpchKey = "^q(\\d+)_.*".r
@@ -177,7 +192,7 @@ object Bench {
     val qs = jline(headline ++ Seq(
       "ssb_total" -> r3(ssb), "cb_total" -> r3(cb),
       "tpcds_total" -> r3(tpcds), "other_total" -> r3(other)))
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},"queries":$qs,"full":"BENCH_FULL.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},"queries":$qs,"full":"${dump.getFileName}","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -43,6 +43,24 @@ object Engine {
       // streaming (watermarks require LTZ) and epoch arithmetic keep
       // working and values match the DuckDB oracle's naive reading
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // Generated-class cache (the reference keeps compiled hot
+      // expressions in an LRU, be/src/exprs/jit/jit_engine.cpp). Spark
+      // keys it by (context classloader, source), so in local[N] every
+      // whole-stage class is compiled twice: on the driver and under
+      // the task classloader. One pass over the 22 TPC-H gates needs
+      // ~320 entries, the lake MoR upsert path ~50 more; the default
+      // 100-entry LRU missed on every lookup of that closed loop
+      // (310 compiles per pass). 1000 is the measured working set with
+      // ~2.7x headroom. The conf is STATIC: it only takes on the
+      // builder (Session.prepare's spark.conf.set would throw), and
+      // CodeGenerator reads it once per JVM, at first use.
+      .config("spark.sql.codegen.cache.maxEntries", 1000L)
+      // Name whole-stage classes without their codegen stage id, which
+      // is part of the cached source: AQE numbers stages as re-planning
+      // reaches them, so stage timing alone made q2/q21 recompile 4-6
+      // classes on a warm pass. Without it the 22 TPC-H gates need 282
+      // classes, not 314, and a warm pass recompiles none.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
 

@@ -9,11 +9,10 @@ object Verify {
     // optional 3rd arg (local dev only): comma-separated query-name filter
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    // Engine's pins, except shuffle partitions = cpus: the oracle dump
+    // runs every gate once over small inputs
+    val spark = Engine.configure(SparkSession.builder().appName("graft-verify"), cpus)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

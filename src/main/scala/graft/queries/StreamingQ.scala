@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import util._
 
 /** Event-time windowing surface, run in batch so the driver's DuckDB
@@ -12,6 +13,25 @@ import util._
   * (SURVEY.md §2.10).
   */
 object StreamingQ extends graft.QueryArea {
+
+  /** Run `body` with `n` shuffle partitions, which a stateful stream
+    * fixes as its state partition count at first run, then restore the
+    * session's value. `body` must stop every stream it starts (`drain`):
+    * the restore would otherwise race a still-running query. */
+  private[graft] def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** Wait for a query's AvailableNow drain, then stop it whatever
+    * happened. A drain still running after `timeoutMs` fails the gate
+    * instead of leaking the query. */
+  private[graft] def drain(q: StreamingQuery, timeoutMs: Long = 120000): Unit =
+    try {
+      if (!q.awaitTermination(timeoutMs))
+        throw new IllegalStateException(s"stream ${q.id} still running after $timeoutMs ms")
+    } finally q.stop()
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_tumbling_window" -> ((spark, dir) => {
@@ -56,13 +76,10 @@ object StreamingQ extends graft.QueryArea {
       // partition per batch, and that per-store checkpoint overhead —
       // not row volume — dominates a one-batch drain. State layout
       // sized to key cardinality is the durable 100 TB choice too.
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = stream.writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      withStatePartitions(spark, 4) {
+        drain(stream.writeStream.format("memory").queryName(qn)
+          .outputMode("complete").trigger(Trigger.AvailableNow()).start())
+      }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("day")).orderBy(col("n").desc, col("term"))
       spark.table(qn)
@@ -102,21 +119,16 @@ object StreamingQ extends graft.QueryArea {
       // overhead dominates two AvailableNow runs (the stream_join_enrich
       // lesson); state layout sized to key cardinality is also the
       // durable 100 TB choice, fixed at the stream's first run
-      def runOnce(): Unit = {
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
-          val stream = spark.readStream.schema(e.schema).parquet(s"$base/in")
-            .withWatermark("ts", "36 hours")
-            .groupBy(window(col("ts"), "1 day"), col("event_type"))
-            .agg(count(lit(1)).as("n"))
-            .select(col("window.start").as("wstart"), col("event_type"), col("n"))
-          val q = stream.writeStream.format("parquet")
-            .option("path", s"$base/out")
-            .option("checkpointLocation", s"$base/chk")
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination(120000)
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      def runOnce(): Unit = withStatePartitions(spark, 4) {
+        val stream = spark.readStream.schema(e.schema).parquet(s"$base/in")
+          .withWatermark("ts", "36 hours")
+          .groupBy(window(col("ts"), "1 day"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("window.start").as("wstart"), col("event_type"), col("n"))
+        drain(stream.writeStream.format("parquet")
+          .option("path", s"$base/out")
+          .option("checkpointLocation", s"$base/chk")
+          .outputMode("append").trigger(Trigger.AvailableNow()).start())
       }
       run1.coalesce(2).write.mode("overwrite").parquet(s"$base/in")
       runOnce()
@@ -147,14 +159,11 @@ object StreamingQ extends graft.QueryArea {
       // store commits per partition per batch; duplicates are FULL row
       // copies, so which copy survives is value-identical regardless
       // of the partition layout
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.streaming.Streams.streamingDedup(stream, Seq("event_id"))
+      withStatePartitions(spark, 4) {
+        drain(graft.streaming.Streams.streamingDedup(stream, Seq("event_id"))
           .writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+          .outputMode("append").trigger(Trigger.AvailableNow()).start())
+      }
       spark.table(qn)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -191,7 +200,7 @@ object StreamingQ extends graft.QueryArea {
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
       val q = graft.streaming.Streams.lakeUpsertSink(
         stream, Seq("user_id"), "event_id", s"$base/table", s"$base/ckpt")
-      q.awaitTermination(180000)
+      drain(q, 180000)
       require(graft.sources.Lake.currentVersion(spark, s"$base/table") >= 3,
         "expected one lake commit per micro-batch")
       graft.sources.Lake.read(spark, s"$base/table")
@@ -230,7 +239,7 @@ object StreamingQ extends graft.QueryArea {
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
       val q = graft.streaming.Streams.lakeMorUpsertSink(
         stream, Seq("user_id"), "event_id", s"$base/table", s"$base/ckpt")
-      q.awaitTermination(180000)
+      drain(q, 180000)
       val table = s"$base/table"
       val cur = graft.sources.Lake.currentVersion(spark, table)
       require(cur >= 2, "expected one lake commit per micro-batch")
@@ -367,10 +376,8 @@ object StreamingQ extends graft.QueryArea {
       // gate's wall. Sizing state partitions to key cardinality instead
       // of batch parallelism is also the right 100 TB shape (state
       // partitioning is a durable layout choice, fixed at first run).
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
       val qn = "sjoin_out_" + System.nanoTime()
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withStatePartitions(spark, 4) {
         val sA = spark.readStream.schema(e.schema).parquet(s"$base/in")
           .filter(col("value") > 100)
           .select(col("event_id").as("a_id"), col("ts").as("a_ts"),
@@ -380,13 +387,12 @@ object StreamingQ extends graft.QueryArea {
           .select(col("event_id").as("b_id"), col("ts").as("b_ts"),
             col("value"))
           .withWatermark("b_ts", "1 hour")
-        val q = sA.join(sB, col("a_id") === col("b_id") &&
+        drain(sA.join(sB, col("a_id") === col("b_id") &&
             col("b_ts") >= col("a_ts") - expr("INTERVAL 1 HOUR") &&
             col("b_ts") <= col("a_ts") + expr("INTERVAL 1 HOUR"))
           .writeStream.format("memory").queryName(qn).outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+          .trigger(Trigger.AvailableNow()).start())
+      }
       spark.table(qn).groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
         .orderBy(col("event_type"))
@@ -427,8 +433,6 @@ object StreamingQ extends graft.QueryArea {
       // micro-batch ANN state is query-count-sized, not scan-sized:
       // 4 shuffle partitions keep the per-batch window/join overhead
       // proportional to the work (see stream_join_enrich)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
       // the corpus float side is read by every micro-batch's rerank —
       // cache it once across batches (the standing-state shape again)
       val cachedCorpus = corpus.cache()
@@ -436,8 +440,8 @@ object StreamingQ extends graft.QueryArea {
       // construction) — collect them instead of a parquet write+read
       // round trip per batch
       val results = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-      try {
-        val q = stream.writeStream
+      try withStatePartitions(spark, 4) {
+        drain(stream.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             graft.operators.VectorIndex.topK(spark, idxPath,
                 cachedCorpus, "vec_id", "embedding", batch, "qid", "qvec",
@@ -445,12 +449,8 @@ object StreamingQ extends graft.QueryArea {
               .collect().foreach(results.add)
           }
           .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        cachedCorpus.unpersist()
-      }
+          .trigger(Trigger.AvailableNow()).start())
+      } finally cachedCorpus.unpersist()
       import scala.jdk.CollectionConverters._
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("qid", org.apache.spark.sql.types.LongType),

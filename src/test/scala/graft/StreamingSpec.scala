@@ -399,4 +399,21 @@ class StreamingSpec extends SparkSuite {
     assert(got.size === batch.size)
     assert(got === batch, "streaming state diverged from the batch recurrence")
   }
+
+  test("a stream gate whose drain times out stops its query before restoring the conf") {
+    import graft.queries.StreamingQ.{drain, withStatePartitions}
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    val err = intercept[IllegalStateException] {
+      withStatePartitions(spark, 3) {
+        assert(spark.conf.get("spark.sql.shuffle.partitions") === "3")
+        // a rate source never drains, so the wait must time out
+        q = spark.readStream.format("rate").load().writeStream.format("noop").start()
+        drain(q, 500)
+      }
+    }
+    assert(err.getMessage.contains("still running"))
+    assert(!q.isActive, "a timed-out drain must stop its query")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === prev)
+  }
 }
